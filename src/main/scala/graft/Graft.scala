@@ -673,18 +673,16 @@ class Graft(spark: SparkSession, sfDir: String,
       }
       case "pq" | "opq" | "sq8" => operators.AnnStore.releasingPinned(spark) {
         val path = ensureChunkKindIndex(indexKind)
-        val served = indexKind match {
-          case "pq" => operators.AnnPq.annPqServedOver(spark, path, qFrame, kT)
-          case "opq" => operators.AnnOpq.annOpqServedOver(spark, path, qFrame, kT)
-          case _ => operators.AnnSq.annSq8ServedOver(spark, path, qFrame, kT)
-        }
+        // the pq store carries its opq rotation, if any, in the model
+        val served =
+          if (indexKind == "sq8") operators.AnnSq.annSq8ServedOver(spark, path, qFrame, kT)
+          else operators.AnnPq.annPqServedOver(spark, path, qFrame, kT)
         val buckets = operators.AnnStore.readManifest(spark, path)
-          .flatMap(m => operators.AnnStore.manifestInt(m, "buckets"))
-          .getOrElse(operators.AnnPq.MinBuckets)
+          .fold(operators.AnnStore.MinBuckets)(operators.AnnStore.manifestBuckets)
         // hash-bucketed stores: each hit's cell is pure arithmetic on its
         // vec_id — recomputed in-plan, so the metadata read stays pruned
         val hits = served
-          .withColumn("cid", pmod(col("vec_id"), lit(buckets)).cast("int"))
+          .withColumn("cid", operators.AnnStore.bucketCol(buckets))
           .select(col("query_id"), col("vec_id"), col("cid"), col("score"))
           .collect()
         chunkHitResults(path, hits)
@@ -762,21 +760,20 @@ class Graft(spark: SparkSession, sfDir: String,
             path, k = kHnsw, degree = 8, m = 4, degreeUp = 8, manifest)
         }
       case "pq" | "opq" | "sq8" =>
-        val buckets = operators.AnnPq.bucketCountFor(nChunksEst)
+        val buckets = operators.AnnStore.bucketCountFor(nChunksEst)
+        // pq/opq stores record the codes-in-vectors layout, so a chunk
+        // store in the old two-table layout rebuilds at this gate
+        val layout =
+          if (kind == "sq8") Nil else Seq("layout" -> operators.AnnPq.Layout)
         val manifest = operators.AnnStore.manifest("chunk_" + kind,
           Seq("m" -> 8, "ks" -> 16, "buckets" -> buckets,
             "chunkSize" -> chunkSize, "chunkOverlap" -> chunkOverlap,
-            "model" -> modelName), fp)
+            "model" -> modelName) ++ layout, fp)
         operators.AnnStore.ensureIndex(spark, path, manifest) {
-          kind match {
-            case "pq" => operators.AnnPq.writePqIndexOver(spark,
-              chunkVectors(buildIndex()), path, m = 8, ks = 16, iters = 3, manifest)
-            case "opq" => operators.AnnOpq.writeOpqIndexOver(spark,
-              chunkVectors(buildIndex()), path, m = 8, ks = 16,
-              innerIters = 2, rounds = 2, manifest)
-            case _ => operators.AnnSq.writeSqIndexOver(spark,
-              chunkVectors(buildIndex()), path, manifest)
-          }
+          val vectors = chunkVectors(buildIndex())
+          if (kind == "sq8") operators.AnnSq.writeSqIndexOver(spark, vectors, path, manifest)
+          else operators.AnnPq.writePqIndexOver(spark, vectors, path,
+            if (kind == "pq") operators.AnnPq.Pq else operators.AnnPq.Opq, manifest)
         }
       case "late" =>
         val tx = TransformerEmbedder.seeded(spark)

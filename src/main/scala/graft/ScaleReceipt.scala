@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{AnnHnsw, AnnIvf, AnnIvfPq, AnnPq}
+import graft.operators.{AnnHnsw, AnnIvf, AnnPq}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -76,7 +76,8 @@ object ScaleReceipt {
     // k scales with the corpus (the IVF contract): ~n/16k vectors per cell
     val k = math.max(16, math.min(256, (n / 16384L).toInt))
     val (_, tPqBuild) = time(AnnPq.ensurePqIndex(spark, dir, pqPath))
-    val (_, tIvfBuild) = time(AnnIvfPq.ensureIvfPqIndex(spark, dir, ivfPath, k = k))
+    val ivfPq = AnnPq.IvfPq.copy(k = Some(k))
+    val (_, tIvfBuild) = time(AnnPq.ensurePqIndex(spark, dir, ivfPath, ivfPq))
     val (_, tIvfPlainBuild) = time(AnnIvf.ensureIvfIndex(spark, dir, ivfPlainPath, k = k))
 
     def serveMin(f: => DataFrame): Double = {
@@ -86,7 +87,7 @@ object ScaleReceipt {
     val tPqServe = serveMin(
       AnnPq.annPqServedOver(spark, pqPath, queries(pqPath), topK = 10))
     val tIvfServe = serveMin(
-      AnnIvfPq.annIvfPqServedOver(spark, ivfPath, queries(ivfPath),
+      AnnPq.annIvfPqServedOver(spark, ivfPath, queries(ivfPath),
         topK = 10, nprobe = math.max(2, k / 16)))
     // r11: FILTERED serving at the same scale — the predicate prunes
     // inside the probed cells, so the filtered serve must track the
@@ -211,7 +212,7 @@ object ScaleReceipt {
     fs.delete(embPath, true)
     fs.rename(staged, embPath)
     val (rPq, tPqRefresh) = time(AnnPq.refreshPqIndex(spark, dir, pqPath).collect())
-    val (rIvf, tIvfRefresh) = time(AnnIvfPq.refreshIvfPqIndex(spark, dir, ivfPath, k = k).collect())
+    val (rIvf, tIvfRefresh) = time(AnnPq.refreshPqIndex(spark, dir, ivfPath, ivfPq).collect())
     val (rIvfP, tIvfPlainRefresh) =
       time(AnnIvf.refreshIvfIndex(spark, dir, ivfPlainPath, k = k).collect())
     def stat(r: Array[org.apache.spark.sql.Row], c: String) = r.head.getAs[Any](c)

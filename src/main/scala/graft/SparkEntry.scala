@@ -119,40 +119,42 @@ object SparkEntry {
       AnnSq.ensureSqIndex(s, dir, path)
       AnnSq.annSq8Served(s, dir, path)
     }),
-    // C5 likewise rows-only (per-subspace k-means); AnnIvfSpec bounds recall.
+    // The PQ family is ONE store (AnnPq) with two optional stages — an
+    // OPQ rotation and IVFADC coarse cells — so each entry below names a
+    // stage choice, not its own operator. All rows-only (k-means / SVD).
+    // C5 plain PQ in-query; AnnIvfSpec bounds recall.
     "ann_pq" -> ((s, dir) => AnnPq.annPq(s, dir)),
-    // C5o: OPTIMIZED PQ (Ge et al. 2013) — a learned orthogonal rotation
+    // C5o: the rotation stage (Ge et al. 2013) — an orthogonal rotation
     // before the subspace split, trained by monotone alternation (warm
-    // k-means sweep / Procrustes SVD). Rows-only; AnnOpqSpec receipts the
+    // k-means sweep / Procrustes SVD). AnnOpqSpec receipts the
     // coordinate-descent trace, never-worse-than-PQ error, orthogonality,
     // determinism, and recall non-inferiority vs plain PQ.
-    "ann_opq" -> ((s, dir) => AnnOpq.annOpq(s, dir)),
-    // the SERVING path of C5o: ADC over persisted OPQ codes with the
-    // stored rotation applied to queries scan-side; training amortized
-    // into the gated build. Rows-only; spec asserts row-identity with
-    // ann_opq and pinned-model code recomputation under refresh.
+    "ann_opq" -> ((s, dir) => AnnPq.annPq(s, dir, p = AnnPq.Opq)),
+    // the SERVING path of C5o: the same store's ADC serve with the stored
+    // rotation applied to queries scan-side; training amortized into the
+    // gated build. Spec asserts row-identity with ann_opq and pinned-model
+    // code recomputation under refresh.
     "ann_opq_served" -> ((s, dir) => {
-      val path = AnnOpq.defaultIndexPath(dir)
-      AnnOpq.ensureOpqIndex(s, dir, path)
-      AnnOpq.annOpqServed(s, path)
+      val path = AnnPq.defaultIndexPath(dir, AnnPq.Opq)
+      AnnPq.ensurePqIndex(s, dir, path, AnnPq.Opq)
+      AnnPq.annPqServed(s, path)
     }),
-    // the SERVING path of C5: ADC over the persisted codes with codebook
-    // training amortized into the gated index build. Rows-only; spec
-    // asserts row-identity with ann_pq.
+    // the SERVING path of C5: ADC over the store's code columns with
+    // codebook training amortized into the gated build. Spec asserts
+    // row-identity with ann_pq.
     "ann_pq_served" -> ((s, dir) => {
       val path = AnnPq.defaultIndexPath(dir)
       AnnPq.ensurePqIndex(s, dir, path)
       AnnPq.annPqServed(s, path)
     }),
-    // C5c IVFADC (r8): coarse cells prune the ADC code scan to nprobe/k of
-    // the corpus and the codebooks encode per-cell residuals — the
-    // composite production layout (flat PQ above scans every code). Served
-    // from the manifest-gated store like the other *_served entries.
-    // Rows-only (k-means); recall + pruning spec-bounded in AnnIvfSpec.
+    // C5c IVFADC (r8): the coarse stage — cells prune the ADC code scan
+    // to nprobe/k of the corpus and the codebooks encode per-cell
+    // residuals (flat PQ above scans every code). Served from the same
+    // manifest-gated store; recall + pruning spec-bounded in AnnIvfSpec.
     "ann_ivfpq" -> ((s, dir) => {
-      val path = AnnIvfPq.defaultIndexPath(dir)
-      AnnIvfPq.ensureIvfPqIndex(s, dir, path)
-      AnnIvfPq.annIvfPqServed(s, path)
+      val path = AnnPq.defaultIndexPath(dir, AnnPq.IvfPq)
+      AnnPq.ensurePqIndex(s, dir, path, AnnPq.IvfPq)
+      AnnPq.annIvfPqServed(s, path)
     }),
     // rows-only like ann_ivf/ann_pq: k-means + iterative beam search are not
     // SQL-replicable; recall spec-bounded vs C1 in AnnIvfSpec
@@ -530,10 +532,10 @@ object SparkEntry {
       "ann_graph.serve" -> ((s, dir) =>
         AnnGraph.annGraphServed(s, s"$scratch/graph")),
       "ann_opq.build" -> ((s, dir) => {
-        AnnOpq.ensureOpqIndex(s, dir, fresh(s, "opq")); one(s)
+        AnnPq.ensurePqIndex(s, dir, fresh(s, "opq"), AnnPq.Opq); one(s)
       }),
       "ann_opq.serve" -> ((s, dir) =>
-        AnnOpq.annOpqServed(s, s"$scratch/opq")),
+        AnnPq.annPqServed(s, s"$scratch/opq")),
       "quality_classifier.build" -> ((s, dir) => {
         qcModelCache.put(dir, TextAnalysis.qualityClassifierFit(
           TextAnalysis.qualityClassifierInput(s, dir),

@@ -70,8 +70,8 @@ object AnnSq {
   /** The persisted SQ8 store: ONE table `vectors/` holding
     * `(vec_id, qvals int8[], scale, cid)` — the quantized representation
     * IS the store (no raw-float table; that 4× cut is SQ8's point), cid
-    * a corpus-derived hash bucket ([[AnnPq.bucketCountFor]], the flat
-    * store's rewrite-unit rule, single-sourced). Because the encode is
+    * a corpus-derived hash bucket ([[AnnStore.bucketCountFor]], the flat
+    * stores' rewrite-unit rule, single-sourced). Because the encode is
     * closed-form there is NO trained model to pin: incremental refresh is
     * just re-quantizing the dirty rows, and the diff compares QUANTIZED
     * payloads — a corpus edit too small to move any int8 code leaves the
@@ -89,8 +89,7 @@ object AnnSq {
           when(col("maxabs") > 0, round(x * 127.0 / col("maxabs") + lit(1e-9)))
             .otherwise(lit(0.0)).cast("byte")).as("qvals") +:
         round(col("maxabs") + lit(1e-9), 6).as("scale") +:
-        payload.toSeq :+
-        pmod(col("vec_id"), lit(buckets)).cast("int").as("cid"): _*)
+        payload.toSeq :+ AnnStore.bucketCol(buckets).as("cid"): _*)
   }
 
   /** Build over an arbitrary `(vec_id, embedding, payload...)` frame —
@@ -99,8 +98,7 @@ object AnnSq {
   private[graft] def writeSqIndexOver(spark: SparkSession, e: DataFrame,
                                       path: String, manifestStr: String): Unit =
     AnnStore.writeStaged(spark, path, manifestStr) { staging =>
-      quantize(e, AnnStore.manifestInt(manifestStr, "buckets")
-        .getOrElse(AnnPq.MinBuckets))
+      quantize(e, AnnStore.manifestBuckets(manifestStr))
         .write.partitionBy("cid").parquet(staging + "/vectors")
     }
 
@@ -109,18 +107,15 @@ object AnnSq {
   private def sqManifest(spark: SparkSession, sfDir: String): String =
     AnnStore.manifest("sq8",
       Seq("dim" -> Dim,
-        "buckets" -> AnnPq.bucketCountFor(Tables.embeddings(spark, sfDir).count())),
+        "buckets" -> AnnStore.bucketCountFor(Tables.embeddings(spark, sfDir).count())),
       AnnStore.corpusFingerprint(spark, sfDir))
-
-  private def manifestBuckets(manifest: String): Int =
-    AnnStore.manifestInt(manifest, "buckets").getOrElse(AnnPq.MinBuckets)
 
   private def writeSqIndexWith(spark: SparkSession, sfDir: String,
                                path: String, manifestStr: String): Unit =
     AnnStore.writeStaged(spark, path, manifestStr) { staging =>
       quantize(Tables.embeddings(spark, sfDir)
         .select(col("vec_id"), col("embedding")),
-        manifestBuckets(manifestStr))
+        AnnStore.manifestBuckets(manifestStr))
         .write.partitionBy("cid").parquet(staging + "/vectors")
     }
 
@@ -142,7 +137,7 @@ object AnnSq {
     AnnStore.refreshIndex(spark, path, manifest,
       assignNew = () => quantize(
         Tables.embeddings(spark, sfDir).select(col("vec_id"), col("embedding")),
-        manifestBuckets(manifest)),
+        AnnStore.manifestBuckets(manifest)),
       rewrite = (affected, rows) => {
         val fs = AnnStore.fileSystem(spark, path)
         affected.foreach { c =>

@@ -3,7 +3,7 @@ package graft.operators
 import graft.IndexStore
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, lit, pmod}
 
 /** Shared persistence plumbing for the served ANN indexes (C3 IVF, C5 PQ,
   * C6 graph) — the same contract the chunk store's `IndexStore` enforces
@@ -140,8 +140,8 @@ private[graft] object AnnStore {
     manifest.replaceAll(""""fingerprint":"[^"]*"""", """"fingerprint":""")
 
   /** Driver-side memo for the serve paths' small sidecar reads — centroids,
-    * PQ codebooks, OPQ rotation, cellstats (r19; the HNSW upper-layer cache
-    * at AnnHnsw.serveCacheFor is the in-repo precedent): every `*ServedOver`
+    * PQ models, cellstats (r19; the HNSW upper-layer cache at
+    * AnnHnsw.serveCacheFor is the in-repo precedent): every `*ServedOver`
     * call was re-reading its k-row sidecars with 1–2 tiny Spark jobs each —
     * pure driver-round latency that multiplies with serve QPS (guide §1.2,
     * §5 "the driver should do almost no data work"). Keyed on (storeRoot,
@@ -152,23 +152,35 @@ private[graft] object AnnStore {
     * rewrites data FILES without changing row content or the manifest, so a
     * memo surviving it is correct by the same argument the HNSW cache makes.
     * Stores without a live manifest are never cached (nothing to invalidate
-    * on). Serve paths only — build/refresh keep direct reads.
+    * on). Serve paths only — build/refresh keep direct reads. Bounded at
+    * [[ServeMemoEntries]]: past it the least recently used entry is evicted,
+    * one at a time, so a busy session keeps its hot stores.
     */
-  private val serveReadMemo =
-    scala.collection.concurrent.TrieMap.empty[(String, String, String), AnyRef]
+  private[graft] val ServeMemoEntries = 64
 
+  private val serveReadMemo =
+    new java.util.LinkedHashMap[(String, String, String), AnyRef](16, 0.75f, true) {
+      override def removeEldestEntry(
+          e: java.util.Map.Entry[(String, String, String), AnyRef]): Boolean =
+        size() > ServeMemoEntries
+    }
+
+  /** The loaded value is SHARED by every caller that hits the memo —
+    * callers must not mutate returned arrays.
+    */
   private[graft] def memoizedRead[T <: AnyRef](spark: SparkSession,
       storeRoot: String, tag: String)(load: => T): T =
     readManifest(spark, storeRoot) match {
       case None => load
       case Some(m) =>
         val key = (storeRoot, tag, m)
-        serveReadMemo.get(key) match {
+        serveReadMemo.synchronized(Option(serveReadMemo.get(key))) match {
           case Some(v) => v.asInstanceOf[T]
           case None =>
+            // loaded outside the lock — a load is Spark jobs; a racing
+            // duplicate load yields an identical value
             val v = load
-            if (serveReadMemo.size > 64) serveReadMemo.clear() // bounded session state
-            serveReadMemo.put(key, v)
+            serveReadMemo.synchronized(serveReadMemo.put(key, v))
             v
         }
     }
@@ -254,8 +266,8 @@ private[graft] object AnnStore {
   }
 
   /** Incremental index maintenance — the shared diff/dispatch skeleton for
-    * the persisted stores (IVF vectors, graph vectors+edges, IVFADC
-    * codes+vectors, flat-PQ buckets). The reference's watch loop re-embeds
+    * the persisted stores (IVF vectors, graph vectors+edges, the PQ
+    * family's coded vectors, SQ8 buckets). The reference's watch loop re-embeds
     * only the changed set and keeps its index live (reference:
     * src/indexer.ts:413-511); the cluster analog is: keep the STORED
     * codebook, diff the new corpus against the stored vectors table on
@@ -606,9 +618,10 @@ private[graft] object AnnStore {
     * writes). Callers pass tasks with NO data dependencies between them,
     * writing to DISTINCT staging subdirectories; content is byte-identical
     * to the sequential order. Tasks must not create tracked checkpoints
-    * (the pin scope is thread-local by design). First failure rethrows
-    * after every thread finishes, so a crashed build never leaves a
-    * half-written task running behind the raised error.
+    * (the pin scope is thread-local by design). The first failure
+    * rethrows after every thread finishes, so a crashed build never leaves
+    * a half-written task running behind the raised error; every other
+    * task's failure rides it as a suppressed exception.
     */
   private[graft] def inParallel(tasks: Seq[() => Unit]): Unit = {
     val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]
@@ -616,7 +629,11 @@ private[graft] object AnnStore {
       try t() catch { case e: Throwable => errs.add(e) }))
     threads.foreach(_.start())
     threads.foreach(_.join())
-    if (!errs.isEmpty) throw errs.peek()
+    if (!errs.isEmpty) {
+      val first = errs.poll()
+      errs.forEach(e => first.addSuppressed(e))
+      throw first
+    }
   }
 
   /** The k-row centroid matrix as a tiny one-file frame — the shared layout
@@ -659,6 +676,42 @@ private[graft] object AnnStore {
     else Some(spark.read.parquet(p.toString).orderBy("cid").collect()
       .map(r => (r.getInt(0), r.getLong(1), r.getDouble(2))))
   }
+
+  /** The flat stores' rewrite unit (PQ/OPQ and SQ8): `cid = pmod(vec_id,
+    * buckets)` — a pure hash bucket, NOT a quantizer cell. A flat code
+    * table has no natural partition; bucketing by vec_id gives
+    * [[refreshIndex]] a bounded delete+append target, so a corpus trickle
+    * rewrites ~|dirty|/buckets of the store instead of all of it.
+    *
+    * The bucket count is DERIVED from the corpus size at manifest time
+    * (recorded in the manifest; every reader honors the stored value), so
+    * the rewrite unit stays ~[[TargetVectorsPerBucket]] vectors as the
+    * corpus grows. Rounded up to a power of two so the count only changes
+    * at geometric corpus-growth points: each threshold crossing is a
+    * `full_params` rebuild (pmod re-shards every bucket), which is only
+    * amortizable if the corpus roughly doubled since the last one.
+    */
+  val MinBuckets = 16
+
+  /** ~1M vectors/bucket: at dim 64 that is ~8 MB of codes and ~256 MB of
+    * raw vectors per bucket — a sane parquet partition either way.
+    */
+  val TargetVectorsPerBucket: Long = 1L << 20
+
+  def bucketCountFor(nVectors: Long): Int = {
+    val want = math.max(1L,
+      (nVectors + TargetVectorsPerBucket - 1) / TargetVectorsPerBucket)
+    math.max(MinBuckets, java.lang.Long.highestOneBit(want * 2 - 1)).toInt
+  }
+
+  /** The bucket count a manifest records — writers and refreshers derive it
+    * from the manifest they stamp or honor, never from the corpus, so the
+    * partition layout and its stamp cannot disagree.
+    */
+  def manifestBuckets(manifest: String): Int =
+    manifestInt(manifest, "buckets").getOrElse(MinBuckets)
+
+  def bucketCol(buckets: Int): Column = pmod(col("vec_id"), lit(buckets)).cast("int")
 
   /** Dir-keyed default location for a persisted index — the bench/driver
     * entries serve from here; freshness rides the manifest, not the path.

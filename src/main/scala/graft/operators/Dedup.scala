@@ -484,7 +484,7 @@ object Dedup {
   /** SemDeDup cluster-count rule: expected cluster size pinned to
     * ~[[TargetVectorsPerSemCluster]] vectors, pow2-stepped so incremental
     * corpus growth doesn't re-cluster on every batch (same discipline as
-    * AnnPq.bucketCountFor). Floor [[MinSemClusters]] keeps test-scale
+    * AnnStore.bucketCountFor). Floor [[MinSemClusters]] keeps test-scale
     * corpora from degenerating to one block; cap [[MaxSemClusters]] keeps
     * the centroid matrix broadcast-bounded (2^16 × dim64 doubles = 33 MB) —
     * past the cap cluster size grows again, which is the declared handoff

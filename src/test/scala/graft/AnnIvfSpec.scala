@@ -287,10 +287,10 @@ class AnnIvfSpec extends SparkSpecBase {
   }
 
   test("IVFADC: pruned residual-ADC search reranks to exact scores; code scan is partition-pruned") {
-    import graft.operators.AnnIvfPq
+    import graft.operators.AnnPq
     val path = java.nio.file.Files.createTempDirectory("graft_ivfpq").toString + "/idx"
-    AnnIvfPq.ensureIvfPqIndex(spark, sf, path)
-    val r = AnnIvfPq.annIvfPqServed(spark, path, nQueries = 10, topK = 5)
+    AnnPq.ensurePqIndex(spark, sf, path, AnnPq.IvfPq)
+    val r = AnnPq.annIvfPqServed(spark, path, nQueries = 10, topK = 5)
     // emitted (exact-reranked) scores agree with brute-force scoring
     val bruteAll = RagSearch.annTopKBatch(spark, sf, nQueries = 10, k = 2000)
       .select("query_id", "vec_id", "score")
@@ -306,7 +306,7 @@ class AnnIvfSpec extends SparkSpecBase {
     // candidates never leave the probed cells: every result's vector sits in
     // one of the query's nprobe nearest cells ∪ its own — weaker, structural
     // check: the codes read itself is a partition-pruned scan
-    val probed = spark.read.parquet(path + "/codes").filter(col("cid").isin(0, 3))
+    val probed = spark.read.parquet(path + "/vectors").filter(col("cid").isin(0, 3))
     val plan = probed.queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters") && plan.contains("cid"))
     // ensure gate: second ensure is a no-op
@@ -314,13 +314,13 @@ class AnnIvfSpec extends SparkSpecBase {
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val mf = new org.apache.hadoop.fs.Path(path, graft.operators.AnnStore.ManifestFile)
     val t1 = fs.getFileStatus(mf).getModificationTime
-    AnnIvfPq.ensureIvfPqIndex(spark, sf, path)
+    AnnPq.ensurePqIndex(spark, sf, path, AnnPq.IvfPq)
     assert(fs.getFileStatus(mf).getModificationTime == t1)
     // external queries (no self-exclusion): the source vector itself wins
     val e = Tables.embeddings(spark, sf)
     val ext = e.filter(col("vec_id").between(100, 102))
       .select((col("vec_id") + 8000).as("query_id"), col("embedding").as("qv"))
-    val served = AnnIvfPq.annIvfPqServedOver(spark, path, ext, topK = 5)
+    val served = AnnPq.annIvfPqServedOver(spark, path, ext, topK = 5)
     assert(served.count() == 15)
     assert(served.filter(col("vec_id") === col("query_id") - 8000 &&
       col("score") === 1.0).count() == 3)

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{AnnOpq, AnnPq, RagSearch}
+import graft.operators.{AnnPq, RagSearch}
 import org.apache.spark.sql.functions._
 
 /** C5o receipts — OPQ (Ge et al. 2013): the learned rotation's own
@@ -14,7 +14,7 @@ class AnnOpqSpec extends SparkSpecBase {
     .filter(col("emb").isNotNull)
 
   test("alternation is coordinate descent: error trace monotone, round 0 is plain PQ") {
-    val model = AnnOpq.trainOpq(corpus, dim = 64, m = 8, ks = 16,
+    val model = AnnPq.trainOpq(corpus, dim = 64, m = 8, ks = 16,
       innerIters = 2, rounds = 2)
     assert(model.errTrace.length == 3)
     model.errTrace.sliding(2).foreach { w =>
@@ -53,9 +53,9 @@ class AnnOpqSpec extends SparkSpecBase {
     spark.read.parquet(sf + "/embeddings.parquet")
       .write.parquet(dir + "/embeddings.parquet")
     val path = java.nio.file.Files.createTempDirectory("graft_opq_idx").toString + "/idx"
-    AnnOpq.ensureOpqIndex(spark, dir, path)
-    val served = AnnOpq.annOpqServed(spark, path).collect().map(_.toSeq).toSeq
-    val inline = AnnOpq.annOpq(spark, dir).collect().map(_.toSeq).toSeq
+    AnnPq.ensurePqIndex(spark, dir, path, AnnPq.Opq)
+    val served = AnnPq.annPqServed(spark, path).collect().map(_.toSeq).toSeq
+    val inline = AnnPq.annPq(spark, dir, p = AnnPq.Opq).collect().map(_.toSeq).toSeq
     assert(served == inline,
       "served OPQ must equal the in-query OPQ row for row (same deterministic model)")
     // live mutation: flip a few vectors → refresh rewrites affected hash
@@ -70,7 +70,7 @@ class AnnOpqSpec extends SparkSpecBase {
     val target = new Path(dir, "embeddings.parquet")
     fs.delete(target, true)
     assert(fs.rename(new Path(tmp), target))
-    val r = AnnOpq.refreshOpqIndex(spark, dir, path).head()
+    val r = AnnPq.refreshPqIndex(spark, dir, path, AnnPq.Opq).head()
     assert(r.getString(0) == "incremental", s"mode=${r.getString(0)}")
     assert(r.getAs[Long]("n_changed") == 3 &&
       r.getAs[Long]("n_cells_rewritten") >= 1 &&
@@ -85,7 +85,7 @@ class AnnOpqSpec extends SparkSpecBase {
     val newVecs = spark.read.parquet(dir + "/embeddings.parquet")
       .filter(col("vec_id").isin(mutIds: _*)).collect()
       .map(r => r.getLong(0) -> r.getSeq[Float](1).map(_.toDouble).toArray).toMap
-    val storedCodes = spark.read.parquet(path + "/codes")
+    val storedCodes = spark.read.parquet(path + "/vectors")
       .filter(col("vec_id").isin(mutIds: _*)).collect()
       .map(r => r.getLong(0) -> books.indices.map(j => r.getAs[Int](s"c$j"))).toMap
     for (id <- mutIds) {
@@ -101,17 +101,17 @@ class AnnOpqSpec extends SparkSpecBase {
       assert(storedCodes(id) == want,
         s"vec $id: refreshed code ${storedCodes(id)} != pinned-model assignment $want")
     }
-    assert(AnnOpq.annOpqServed(spark, path).collect().nonEmpty)
+    assert(AnnPq.annPqServed(spark, path).collect().nonEmpty)
   }
 
   test("driver query: shape, determinism, recall within reach of plain PQ") {
-    val out = AnnOpq.annOpq(spark, sf).collect()
+    val out = AnnPq.annPq(spark, sf, p = AnnPq.Opq).collect()
     assert(out.map(_.getLong(0)).distinct.sorted.toSeq == (0L until 10L).toSeq)
     for ((q, rows) <- out.groupBy(_.getLong(0))) {
       assert(rows.map(_.getLong(1)).sorted.toSeq == (1L to 5L).toSeq, s"query $q ranks")
       assert(rows.forall(_.getLong(2) != q), "self-match must be excluded")
     }
-    val again = AnnOpq.annOpq(spark, sf).collect()
+    val again = AnnPq.annPq(spark, sf, p = AnnPq.Opq).collect()
     assert(out.map(_.toSeq).toSeq == again.map(_.toSeq).toSeq,
       "deterministic training + assignment ⇒ run-stable query")
     // recall vs the exact C1 baseline: at worst marginally below plain

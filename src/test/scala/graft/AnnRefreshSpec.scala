@@ -183,14 +183,14 @@ class AnnRefreshSpec extends SparkSpecBase {
     import graft.operators.AnnPq
     val pqIdx = root + "/pq"
     AnnPq.ensurePqIndex(spark, dir, pqIdx)
-    val pqRows = spark.read.parquet(pqIdx + "/codes").collect().map(_.toSeq).toSet
-    fs.listStatus(new Path(pqIdx + "/codes"))
+    val pqRows = spark.read.parquet(pqIdx + "/vectors").collect().map(_.toSeq).toSet
+    fs.listStatus(new Path(pqIdx + "/vectors"))
       .filter(s => s.isDirectory && s.getPath.getName.startsWith("cid=")).take(1)
       .foreach(st => fragment(st.getPath, 5))
     val pqStats = AnnPq.compactPqIndex(spark, pqIdx).collect()
-      .find(_.getString(0) == "codes").get
+      .find(_.getString(0) == "vectors").get
     assert(pqStats.getLong(1) >= 1 && pqStats.getLong(3) < pqStats.getLong(2))
-    assert(spark.read.parquet(pqIdx + "/codes").collect().map(_.toSeq).toSet == pqRows)
+    assert(spark.read.parquet(pqIdx + "/vectors").collect().map(_.toSeq).toSet == pqRows)
   }
 
   test("compaction swap is reader-atomic: every protocol state lists a complete row set; heal converges") {
@@ -304,18 +304,18 @@ class AnnRefreshSpec extends SparkSpecBase {
   }
 
   test("IVFADC refresh: affected cells' codes recomputed from the pinned books, untouched cells preserved") {
-    import graft.operators.AnnIvfPq
+    import graft.operators.AnnPq
     val dir = copyCorpus()
     val root = Files.createTempDirectory("graft_refr_ivfpq").toString
     val idx = root + "/idx"
-    AnnIvfPq.ensureIvfPqIndex(spark, dir, idx)
+    AnnPq.ensurePqIndex(spark, dir, idx, AnnPq.IvfPq)
     val centroids = AnnStore.readCentroids(spark, idx)
-    val books = graft.operators.AnnPq.readBooks(spark, idx)
+    val books = AnnPq.readBooks(spark, idx)
     val (cell, ids) = pickCellIds(dir, centroids)
-    val beforeV = cellFingerprints(idx, "/vectors")
-    val beforeC = cellFingerprints(idx, "/codes")
+    // one table: the vectors and their code columns share each cell's files
+    val before = cellFingerprints(idx, "/vectors")
     mutateOneCell(dir, ids)
-    val stats = AnnIvfPq.refreshIvfPqIndex(spark, dir, idx).head()
+    val stats = AnnPq.refreshPqIndex(spark, dir, idx, AnnPq.IvfPq).head()
     assert(stats.getAs[String]("mode") == "incremental")
     assert(stats.getAs[Long]("n_cells_rewritten") == 1)
     // vectors table == new corpus assigned with the PINNED centroids
@@ -323,9 +323,9 @@ class AnnRefreshSpec extends SparkSpecBase {
       .select(col("vec_id"), col("embedding"),
         VecExprs.centroidAssign(col("embedding").cast("array<double>"), centroids,
           useCosine = true).as("cid"))
-    val a = spark.read.parquet(idx + "/vectors")
+    val a = spark.read.parquet(idx + "/vectors").select("vec_id", "embedding", "cid")
     assert(a.exceptAll(expectedV).count() == 0 && expectedV.exceptAll(a).count() == 0)
-    // codes table == pinned-book encoding of the new corpus's residuals
+    // code columns == pinned-book encoding of the new corpus's residuals
     import spark.implicits._
     val sd = books.head.head.length
     val centDf = broadcast(centroids.zipWithIndex
@@ -338,15 +338,14 @@ class AnnRefreshSpec extends SparkSpecBase {
       .withColumn("res",
         zip_with(col("embedding").cast("array<double>"), col("centroid"), (x, y) => x - y))
       .select(col("vec_id") +: codeCols :+ col("cid"): _*)
-    val c = spark.read.parquet(idx + "/codes")
+    val c = spark.read.parquet(idx + "/vectors")
+      .select(col("vec_id") +: books.indices.map(j => col(s"c$j")) :+ col("cid"): _*)
     assert(c.exceptAll(expectedC).count() == 0 && expectedC.exceptAll(c).count() == 0)
-    // unaffected cells byte-for-byte untouched in BOTH tables
-    val afterV = cellFingerprints(idx, "/vectors")
-    val afterC = cellFingerprints(idx, "/codes")
-    for ((cc, fp) <- beforeV if cc != cell) assert(afterV(cc) == fp, s"vectors cell $cc rewritten")
-    for ((cc, fp) <- beforeC if cc != cell) assert(afterC(cc) == fp, s"codes cell $cc rewritten")
+    // unaffected cells byte-for-byte untouched
+    val after = cellFingerprints(idx, "/vectors")
+    for ((cc, fp) <- before if cc != cell) assert(after(cc) == fp, s"cell $cc rewritten")
     // serving from the refreshed index still reranks to exact scores
-    val r = AnnIvfPq.annIvfPqServed(spark, idx)
+    val r = AnnPq.annIvfPqServed(spark, idx)
     val bruteAll = graft.operators.RagSearch.annTopKBatch(spark, dir, nQueries = 10, k = 2000)
       .select("query_id", "vec_id", "score")
     assert(r.select("query_id", "vec_id", "score").except(bruteAll).count() == 0)
@@ -417,8 +416,7 @@ class AnnRefreshSpec extends SparkSpecBase {
     val dir = copyCorpus()
     val idx = Files.createTempDirectory("graft_refr_pq").toString + "/idx"
     AnnPq.ensurePqIndex(spark, dir, idx)
-    val beforeC = cellFingerprints(idx, "/codes")
-    val beforeV = cellFingerprints(idx, "/vectors")
+    val before = cellFingerprints(idx, "/vectors")
     // bucket = pmod(vec_id, 16): remove 7 (bucket 7), scale 23 (bucket 7),
     // copy 40 → vec_id 1000040 (bucket 8) — exactly two affected buckets
     mutateOneCell(dir, Seq(7L, 23L, 40L))
@@ -431,9 +429,9 @@ class AnnRefreshSpec extends SparkSpecBase {
     val expectedV = Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("embedding"),
         pmod(col("vec_id"), lit(16)).cast("int").as("cid"))
-    val v = spark.read.parquet(idx + "/vectors")
+    val v = spark.read.parquet(idx + "/vectors").select("vec_id", "embedding", "cid")
     assert(v.exceptAll(expectedV).count() == 0 && expectedV.exceptAll(v).count() == 0)
-    // codes table == PINNED-books encoding of the new corpus (no retrain)
+    // code columns == PINNED-books encoding of the new corpus (no retrain)
     val books = AnnPq.readBooks(spark, idx)
     val sd = books.head.head.length
     val codeCols = books.indices.map(j =>
@@ -443,14 +441,13 @@ class AnnRefreshSpec extends SparkSpecBase {
       .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
       .select(col("vec_id") +: codeCols :+
         pmod(col("vec_id"), lit(16)).cast("int").as("cid"): _*)
-    val c = spark.read.parquet(idx + "/codes")
+    val c = spark.read.parquet(idx + "/vectors")
+      .select(col("vec_id") +: books.indices.map(j => col(s"c$j")) :+ col("cid"): _*)
     assert(c.exceptAll(expectedC).count() == 0 && expectedC.exceptAll(c).count() == 0)
     // only buckets 7 and 8 were rewritten; the other 14 are byte-identical
-    val afterC = cellFingerprints(idx, "/codes")
-    val afterV = cellFingerprints(idx, "/vectors")
-    for ((b, fp) <- beforeC if b != 7 && b != 8) assert(afterC(b) == fp, s"codes bucket $b rewritten")
-    for ((b, fp) <- beforeV if b != 7 && b != 8) assert(afterV(b) == fp, s"vectors bucket $b rewritten")
-    assert(afterC(7) != beforeC(7) && afterC(8) != beforeC(8))
+    val after = cellFingerprints(idx, "/vectors")
+    for ((b, fp) <- before if b != 7 && b != 8) assert(after(b) == fp, s"bucket $b rewritten")
+    assert(after(7) != before(7) && after(8) != before(8))
     // serving from the refreshed store still exact-reranks to true scores
     val r = AnnPq.annPqServed(spark, idx)
     val bruteAll = graft.operators.RagSearch.annTopKBatch(spark, dir, nQueries = 10, k = 2000)
@@ -493,34 +490,33 @@ class AnnRefreshSpec extends SparkSpecBase {
   }
 
   test("flat PQ bucket count derives from corpus size (manifest-recorded, pow2 steps)") {
-    import graft.operators.AnnPq
     // small corpora stay at the floor — the r9 layout, so existing stores'
     // manifests (buckets=16) remain param-compatible at test scale
-    assert(AnnPq.bucketCountFor(0) == 16 && AnnPq.bucketCountFor(60) == 16 &&
-      AnnPq.bucketCountFor(16L << 20) == 16)
+    assert(AnnStore.bucketCountFor(0) == 16 && AnnStore.bucketCountFor(60) == 16 &&
+      AnnStore.bucketCountFor(16L << 20) == 16)
     // beyond the floor: next power of two of ceil(n / 1M) — the rewrite unit
     // stays ~1M vectors, and the count only changes at geometric growth
     // points (each threshold crossing is an amortized full_params rebuild)
-    assert(AnnPq.bucketCountFor((16L << 20) + 1) == 32)
-    assert(AnnPq.bucketCountFor(100L << 20) == 128)
-    assert(AnnPq.bucketCountFor(1_000_000_000L) == 1024)
+    assert(AnnStore.bucketCountFor((16L << 20) + 1) == 32)
+    assert(AnnStore.bucketCountFor(100L << 20) == 128)
+    assert(AnnStore.bucketCountFor(1_000_000_000L) == 1024)
     // monotone: a growing corpus can never shrink its bucket count past MinBuckets
     val probes = Seq(1L, 1L << 20, 20L << 20, 40L << 20, 1L << 30, 1L << 34)
-    assert(probes.map(AnnPq.bucketCountFor) == probes.map(AnnPq.bucketCountFor).sorted)
+    assert(probes.map(AnnStore.bucketCountFor) == probes.map(AnnStore.bucketCountFor).sorted)
   }
 
   test("build + refresh release every pinned block (no executor-storage leak)") {
-    import graft.operators.{AnnIvfPq, AnnPq}
+    import graft.operators.AnnPq
     val dir = copyCorpus()
     val root = Files.createTempDirectory("graft_refr_pin").toString
     val before = spark.sparkContext.getPersistentRDDs.keySet
-    AnnIvfPq.ensureIvfPqIndex(spark, dir, root + "/ivfpq")
+    AnnPq.ensurePqIndex(spark, dir, root + "/ivfpq", AnnPq.IvfPq)
     AnnGraph.ensureGraphIndex(spark, dir, root + "/graph")
     AnnPq.ensurePqIndex(spark, dir, root + "/pq")
     val centroids = AnnStore.readCentroids(spark, root + "/ivfpq")
     val (_, ids) = pickCellIds(dir, centroids)
     mutateOneCell(dir, ids)
-    assert(AnnIvfPq.refreshIvfPqIndex(spark, dir, root + "/ivfpq")
+    assert(AnnPq.refreshPqIndex(spark, dir, root + "/ivfpq", AnnPq.IvfPq)
       .head().getAs[String]("mode") == "incremental")
     assert(AnnGraph.refreshGraphIndex(spark, dir, root + "/graph")
       .head().getAs[String]("mode") == "incremental")

@@ -45,4 +45,23 @@ class AnnServeMemoSpec extends SparkSpecBase {
     assert(!(v2 eq v1), "manifest change must invalidate the memo")
     assert(AnnStore.memoizedRead(spark, root, "t")(load()) eq v2)
   }
+
+  test("memoizedRead: past its bound the memo evicts one entry; the 65th insert keeps the other 64") {
+    val root = Files.createTempDirectory("graft_memo_evict").toString + "/store"
+    AnnStore.fileSystem(spark, root).mkdirs(new Path(root))
+    writeManifest(root, """{"version":1,"kind":"x","fingerprint":"evict"}""")
+    val n = AnnStore.ServeMemoEntries
+    var loads = 0
+    def load(t: Int): Integer = { loads += 1; Integer.valueOf(t) }
+    // n + 1 distinct tags: the last insert overflows the bound by one
+    for (t <- 0 to n) AnnStore.memoizedRead(spark, root, s"t$t")(load(t))
+    assert(loads == n + 1)
+    // the n most recent entries all still hit — nothing was cleared
+    for (t <- 1 to n)
+      assert(AnnStore.memoizedRead(spark, root, s"t$t")(load(-1)) == t, s"t$t evicted")
+    assert(loads == n + 1, "an insert past the bound must not drop the other entries")
+    // only the least recently used entry went
+    assert(AnnStore.memoizedRead(spark, root, "t0")(load(-1)) == -1)
+    assert(loads == n + 2)
+  }
 }

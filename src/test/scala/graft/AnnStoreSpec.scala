@@ -128,4 +128,17 @@ class AnnStoreSpec extends SparkSpecBase {
     AnnIvf.ensureIvfIndex(spark, dir, idx, k = 4)
     assert(AnnStore.manifestInt(AnnStore.readManifest(spark, idx).get, "k").contains(4))
   }
+
+  test("inParallel: every failing task's error is reachable from the one it throws") {
+    val ran = new java.util.concurrent.atomic.AtomicInteger()
+    val thrown = intercept[IllegalStateException] {
+      AnnStore.inParallel(Seq(
+        () => throw new IllegalStateException("task a"),
+        () => { ran.incrementAndGet(); () },
+        () => throw new IllegalStateException("task b")))
+    }
+    assert(ran.get == 1, "the healthy task still ran to completion")
+    val messages = (thrown +: thrown.getSuppressed.toSeq).map(_.getMessage).toSet
+    assert(messages == Set("task a", "task b"), s"errors reachable: $messages")
+  }
 }

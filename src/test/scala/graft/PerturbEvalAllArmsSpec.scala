@@ -211,8 +211,10 @@ class PerturbEvalAllArmsSpec extends SparkSpecBase {
     // the driver queries' default stores — manifest-gated, built once
     val ivfPath = AnnIvf.defaultIndexPath(sf); AnnIvf.ensureIvfIndex(spark, sf, ivfPath)
     val pqPath = AnnPq.defaultIndexPath(sf); AnnPq.ensurePqIndex(spark, sf, pqPath)
-    val opqPath = AnnOpq.defaultIndexPath(sf); AnnOpq.ensureOpqIndex(spark, sf, opqPath)
-    val ivfpqPath = AnnIvfPq.defaultIndexPath(sf); AnnIvfPq.ensureIvfPqIndex(spark, sf, ivfpqPath)
+    val opqPath = AnnPq.defaultIndexPath(sf, AnnPq.Opq)
+    AnnPq.ensurePqIndex(spark, sf, opqPath, AnnPq.Opq)
+    val ivfpqPath = AnnPq.defaultIndexPath(sf, AnnPq.IvfPq)
+    AnnPq.ensurePqIndex(spark, sf, ivfpqPath, AnnPq.IvfPq)
     val sqPath = AnnSq.defaultIndexPath(sf); AnnSq.ensureSqIndex(spark, sf, sqPath)
     val graphPath = AnnGraph.defaultIndexPath(sf); AnnGraph.ensureGraphIndex(spark, sf, graphPath)
     val hnswPath = AnnHnsw.defaultIndexPath(sf); AnnHnsw.ensureHnswIndex(spark, sf, hnswPath)
@@ -238,11 +240,11 @@ class PerturbEvalAllArmsSpec extends SparkSpecBase {
       ("brute", bruteVec, 0.9),
       ("ivf_served", AnnIvf.annIvfServedOver(spark, ivfPath, vecQueries,
         topK = k, nprobe = 2), 0.8),
-      ("ivfpq_served", AnnIvfPq.annIvfPqServedOver(spark, ivfpqPath, vecQueries,
+      ("ivfpq_served", AnnPq.annIvfPqServedOver(spark, ivfpqPath, vecQueries,
         topK = k, nprobe = 2), 3 * random),
       ("pq_served", AnnPq.annPqServedOver(spark, pqPath, vecQueries,
         topK = k), 3 * random),
-      ("opq_served", AnnOpq.annOpqServedOver(spark, opqPath, vecQueries,
+      ("opq_served", AnnPq.annPqServedOver(spark, opqPath, vecQueries,
         topK = k), 3 * random),
       ("sq8_served", AnnSq.annSq8ServedOver(spark, sqPath, vecQueries,
         k = k), 0.8),

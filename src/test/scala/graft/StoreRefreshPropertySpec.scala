@@ -85,6 +85,16 @@ class StoreRefreshPropertySpec extends SparkSpecBase {
          else Nil))
   }
 
+  /** A PQ-family stage choice: the pinned rebuild writes the live store's
+    * own model (codebooks plus its rotation or centroids).
+    */
+  private def pqFamily(name: String, p: AnnPq.PqParams, tables: Seq[String]) =
+    Family(name, _ => tables,
+      (dir, path) => AnnPq.ensurePqIndex(spark, dir, path, p),
+      (dir, path) => AnnPq.refreshPqIndex(spark, dir, path, p).head(),
+      (dir, live, out) => AnnPq.writePqIndexWithModel(spark, dir, out,
+        AnnPq.readModel(spark, live), AnnStore.readManifest(spark, live).get))
+
   private val families = Seq(
     Family("ivf", _ => Seq("vectors", "centroids"),
       (dir, p) => AnnIvf.ensureIvfIndex(spark, dir, p),
@@ -109,27 +119,9 @@ class StoreRefreshPropertySpec extends SparkSpecBase {
         Tables.embeddings(spark, dir), out,
         AnnStore.readCentroids(spark, live), k = 16, degree = 8, m = 4,
         degreeUp = 8, manifestStr = AnnStore.readManifest(spark, live).get)),
-    Family("pq", _ => Seq("codes", "vectors", "books"),
-      (dir, p) => AnnPq.ensurePqIndex(spark, dir, p),
-      (dir, p) => AnnPq.refreshPqIndex(spark, dir, p).head(),
-      (dir, live, out) => {
-        val m = AnnStore.readManifest(spark, live).get
-        AnnPq.writePqIndexWithBooks(spark, dir, out,
-          AnnPq.readBooks(spark, live),
-          AnnStore.manifestInt(m, "buckets").get, m)
-      }),
-    Family("ivfpq", _ => Seq("codes", "vectors", "books", "centroids"),
-      (dir, p) => AnnIvfPq.ensureIvfPqIndex(spark, dir, p),
-      (dir, p) => AnnIvfPq.refreshIvfPqIndex(spark, dir, p).head(),
-      (dir, live, out) => AnnIvfPq.writeIvfPqIndexWithModels(spark, dir, out,
-        AnnStore.readCentroids(spark, live), AnnPq.readBooks(spark, live),
-        AnnStore.readManifest(spark, live).get)),
-    Family("opq", _ => Seq("codes", "vectors", "books", "rotation"),
-      (dir, p) => AnnOpq.ensureOpqIndex(spark, dir, p),
-      (dir, p) => AnnOpq.refreshOpqIndex(spark, dir, p).head(),
-      (dir, live, out) => AnnOpq.writeOpqIndexWithModel(spark, dir, out,
-        AnnOpq.readStoredRotation(spark, live), AnnPq.readBooks(spark, live),
-        AnnStore.readManifest(spark, live).get)),
+    pqFamily("pq", AnnPq.Pq, Seq("vectors", "books")),
+    pqFamily("ivfpq", AnnPq.IvfPq, Seq("vectors", "books", "centroids")),
+    pqFamily("opq", AnnPq.Opq, Seq("vectors", "books", "rotation")),
     Family("sq8", _ => Seq("vectors"),
       (dir, p) => AnnSq.ensureSqIndex(spark, dir, p),
       (dir, p) => AnnSq.refreshSqIndex(spark, dir, p).head(),
